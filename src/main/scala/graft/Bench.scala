@@ -1,19 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_ONLY=q_a,q_b restricts the run for isolated
+    // profiling (the shared-JVM bench shows cross-query noise);
+    // unset = full suite, the driver contract.
+    val selected = Session.selected()
+    val spark = Session.local()
     // Warm the JVM once before timing: JIT + whole-stage-codegen
     // compilation paths (scan, hash agg, shuffle, sort-merge join)
     // otherwise land on whichever queries happen to run first. This
@@ -26,19 +19,13 @@ object Bench {
       w.groupBy("k").agg(sum("id"), countDistinct("s")).count()
       w.as("a").join(w.as("b"), "k").filter(col("a.id") < 10).count()
     }
-    // SPARK_GRAFT_ONLY=q_a,q_b restricts the run for isolated
-    // profiling (the shared-JVM bench shows cross-query noise);
-    // unset = full suite, the driver contract.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     // SPARK_GRAFT_REPS=N records min-of-N per query (the isolated
     // re-measure protocol for adjudicating co-tenant noise spikes);
     // default 1 = the driver's single cold run.
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "1").toInt
     // A failed query records -1 (NOT a fake timing) and is listed in
     // "failed" — a broken query must never look fast.
-    val results = SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
+    val results = selected.map { case (name, fn) =>
       try {
         val times = (1 to reps).map { _ =>
           spark.sparkContext.setJobDescription(name)

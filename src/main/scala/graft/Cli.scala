@@ -80,12 +80,8 @@ object Cli {
     // reuse a live session when embedded (tests, notebooks); only
     // stop what this main itself created
     val preexisting = SparkSession.getDefaultSession.isDefined
-    val spark = SparkSession.builder()
-      .master(opts.getOrElse("master", "local[*]"))
-      .appName("graft-cli")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder(opts.getOrElse("master", "local[*]"))
+      .appName("graft-cli").getOrCreate()
     try {
       val dssp = opts.get("dssp").map(p =>
         StructureFormats.dsspResidues(spark, p)

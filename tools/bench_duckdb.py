@@ -4,9 +4,12 @@ denominator for BASELINE.md). Reads oracle_sql.json from a Verify
 output dir so the SQL text is exactly what the driver hash-checks.
 
 Usage: bench_duckdb.py <sfDir> <verifyOutDir> [repeats=3]
+Runs at SPARK_GRAFT_CPUS threads, the core count graft.Bench gives Spark
+(default: every core).
 Prints one JSON line: {"queries": {name: best_seconds, ...}}
 """
 import json
+import os
 import sys
 import time
 
@@ -18,7 +21,8 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
 
 def main(sf_dir, out_dir, repeats=3):
     con = duckdb.connect()
-    con.execute("SET threads TO 32")
+    threads = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
+    con.execute(f"SET threads TO {threads}")
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
